@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.Json.quote
+
 /** Driver-run benchmark: every registered query at the bench SF, full-row
  *  materialization through the noop sink (so Catalyst can't prune the
  *  final projection the way `count()` lets it), one untimed warmup to
@@ -98,9 +100,6 @@ object Bench {
         f"[bench] one-time lake/stream builds (untimed, $poolSize%d-way pool): $sec%.1f s")
       sec
     }
-    // builds-only mode for pool-size A/B experiments (not used by the driver)
-    if (sys.env.get("SPARK_GRAFT_BUILDS_ONLY").contains("1")) { spark.stop(); return }
-
     // optional name filter for local iteration on specific queries
     val names = (if (args.nonEmpty) SparkEntry.queries.keys.toSeq.filter(args.toSet)
       else SparkEntry.queries.keys.toSeq).sorted
@@ -126,9 +125,9 @@ object Bench {
         name -> (if (re >= 0) re else m)
       } else name -> m
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => s"${quote(k)}:$v" }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","builds_sec":$buildsSec,"reps":$reps,"queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","builds_sec":$buildsSec,"reps":$reps,"queries":$qs,"sf":${quote(sfDir)}}"""
     println(json)
     // A name-filtered local run must not clobber the full-suite artifact.
     val artifact = if (args.isEmpty) "BENCH_LOCAL.json" else "BENCH_LOCAL_partial.json"
@@ -140,7 +139,7 @@ object Bench {
     // LAST stdout line — short enough that any tail window contains it
     // whole — with a pointer to the per-query artifact. Additions only:
     // the full contract line and BENCH_LOCAL.json are unchanged.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","builds_sec":$buildsSec,"reps":$reps,"n_queries":${results.size},"queries_file":"$artifact","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","builds_sec":$buildsSec,"reps":$reps,"n_queries":${results.size},"queries_file":${quote(artifact)},"sf":${quote(sfDir)}}""")
     spark.stop()
   }
 }

@@ -244,19 +244,6 @@ object Dedup {
    *  (a clone flood in either snapshot degenerates the bucket). */
   def nearDuplicatesAgainstReference(newDocs: DataFrame, reference: DataFrame,
       threshold: Double, maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val (sigsNew, sigsRef, out) =
-      nearDuplicatesAgainstReferenceLazy(newDocs, reference, threshold, maxBucketSize)
-    val materialized = Iterate.truncate(out) // pairs ≥ threshold — small
-    sigsNew.unpersist(); sigsRef.unpersist()
-    materialized
-  }
-
-  /** The un-materialized plan behind [[nearDuplicatesAgainstReference]]
-   *  (returned with the two persisted signature frames the caller must
-   *  release) — plan evidence ([[graft.Plans]]) needs the lazy frame. */
-  private[graft] def nearDuplicatesAgainstReferenceLazy(
-      newDocs: DataFrame, reference: DataFrame,
-      threshold: Double, maxBucketSize: Int): (DataFrame, DataFrame, DataFrame) = {
     val sigsNew = signatures(newDocs).persist()
     val sigsRef = signatures(reference).persist()
     val bNew0 = bands(sigsNew).select(col("doc_id").as("new_id"), col("band"), col("key"))
@@ -283,7 +270,9 @@ object Dedup {
         aggregate(eq, lit(0), _ + _).cast("double") / lit(NumPerms.toDouble))
       .filter(col("est_jaccard") >= threshold)
       .select("new_id", "ref_id", "est_jaccard")
-    (sigsNew, sigsRef, out)
+    val materialized = Iterate.truncate(out) // pairs ≥ threshold — small
+    sigsNew.unpersist(); sigsRef.unpersist()
+    materialized
   }
 
   def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame = {
@@ -314,17 +303,6 @@ object Dedup {
    *  contract — the same opt-in posture as the capped minhash/simhash
    *  candidate generators. */
   def ngramJaccard(docs: DataFrame, threshold: Double, maxBucketSize: Int): DataFrame = {
-    val (persisted, out) = ngramJaccardLazy(docs, threshold, maxBucketSize)
-    val materialized = Iterate.truncate(out) // pairs ≥ threshold only (small)
-    persisted.foreach(_.unpersist())
-    materialized
-  }
-
-  /** The un-materialized plan behind [[ngramJaccard]] (with the persisted
-   *  frames the caller must release) — plan evidence needs the lazy
-   *  frame, the query needs the eager truncate. */
-  private[graft] def ngramJaccardLazy(docs: DataFrame, threshold: Double,
-      maxBucketSize: Int): (Seq[DataFrame], DataFrame) = {
     // ONE shingle table feeds the signature pipeline, the per-doc counts,
     // and both intersection sides; the caller eagerly materializes the
     // (small) result so the big intermediates can be unpersisted.
@@ -359,7 +337,9 @@ object Dedup {
         col("i").cast("double") / (col("na") + col("nb") - col("i")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-    (Seq(expl, sigs, cand), out)
+    val materialized = Iterate.truncate(out) // pairs ≥ threshold only (small)
+    Seq(expl, sigs, cand).foreach(_.unpersist())
+    materialized
   }
 
   /** MinHash estimator-quality evaluation over the LSH candidate set —
@@ -374,17 +354,6 @@ object Dedup {
    *  numbers tell an operator whether the capped signature path's
    *  threshold can be trusted on THEIR corpus before a dedup run. */
   def minhashEval(docs: DataFrame, threshold: Double): DataFrame = {
-    val (persisted, agg) = minhashEvalLazy(docs, threshold)
-    val out = Iterate.truncate(agg)
-    persisted.foreach(_.unpersist())
-    out
-  }
-
-  /** The un-materialized plan behind [[minhashEval]] (with the persisted
-   *  frames the caller must release) — plan evidence needs the lazy
-   *  frame, the query needs the eager truncate. */
-  private[graft] def minhashEvalLazy(docs: DataFrame,
-      threshold: Double): (Seq[DataFrame], DataFrame) = {
     val expl = shingleRows(docs).persist()
     // signature + per-doc shingle total from ONE aggregate (see
     // signaturesAndCountsFromShingles); the per-side attach below then
@@ -422,7 +391,9 @@ object Dedup {
       coalesce(sum(when(col("est") < t && col("exact") >= t, 1L).otherwise(0L)), lit(0L)).as("fn"),
       coalesce(sum(when(col("est") < t && col("exact") < t, 1L).otherwise(0L)), lit(0L)).as("tn"),
       round(avg(round(abs(col("est") - col("exact")), 4)), 4).as("mean_abs_err"))
-    (Seq(expl, sigs, cand), agg)
+    val out = Iterate.truncate(agg)
+    Seq(expl, sigs, cand).foreach(_.unpersist())
+    out
   }
 
   /** Streaming exact dedup: content-hash keyed, first-arrival-wins,

@@ -26,8 +26,8 @@ object StreamQueries {
       val base = java.nio.file.Files.createTempDirectory("graft_stream")
       // the file stream source wants a directory: expose the events
       // parquet through a symlinked source dir. The driver testdata's
-      // events.parquet is a single FILE; generated corpora (ScaleProbe)
-      // are parquet DIRECTORIES, whose nested part-files a non-recursive
+      // events.parquet is a single FILE; generated corpora are parquet
+      // DIRECTORIES, whose nested part-files a non-recursive
       // read would miss — flatten those by symlinking each part-file.
       val srcDir = base.resolve("src")
       java.nio.file.Files.createDirectory(srcDir)

@@ -64,8 +64,8 @@ object QueryEngine {
    *  series-keyed distribution with zero further exchanges. Winners are
    *  bit-identical to [[dedupe]] (max seq per timestamp).
    *
-   *  MEASURED A/B (p_ds_sum_hashdedup vs q_ds_sum, 100M events,
-   *  isolated ScaleAttr): this path removes the window's reduce-stage
+   *  MEASURED A/B (p_ds_sum_hashdedup vs q_ds_sum, 100M events, per-stage
+   *  task metrics, with the former JSON tag key): this path removes the window's reduce-stage
    *  sort entirely — 12.9 GB memory / 1.05 GB disk spill → ZERO — and
    *  writes 31% less shuffle (2.30 vs 3.35 GB; the JSON tag string is
    *  more compact than the map encoding), but costs +75% reduce-stage
@@ -84,9 +84,9 @@ object QueryEngine {
     // — a struct- or map-valued buffer is immutable to HashAggregate and
     // silently demotes the whole stage to SortAggregate + Sort, which is
     // the very sort this path exists to remove. The series identity
-    // rides the GROUPING key (tags as JSON string, the downsample
-    // discipline); segment_start is constant within a (series, ts) group
-    // so max() reconstructs it exactly.
+    // rides the GROUPING key (tags through the TagsJson key, the
+    // downsample discipline); segment_start is constant within a
+    // (series, ts) group so max() reconstructs it exactly.
     points
       .withColumn("__tj", graft.core.TagsJson.key(col("tags")))
       .repartition(col("series_id"))
@@ -433,9 +433,9 @@ object QueryEngine {
     // joined back to the values side — evaluated the entire upstream
     // (dedupe window + downsample aggregate) TWICE: at the 100M-event
     // probe point that was 2× the reduce-stage task-time and 2× its
-    // ~13 GB sort spill (ScaleAttr stage table), for identical output.
-    // The JSON string as the grouping key keeps this a HashAggregate
-    // (maps can't be grouping keys).
+    // ~13 GB sort spill (per-stage task metrics), for identical output.
+    // The TagsJson entries key keeps this a HashAggregate (maps can't be
+    // grouping keys).
     // with a timezone the grid is NOT an epoch arithmetic sequence: DST
     // days are 23/25 local hours, so the label set is enumerated once on
     // the driver from the same zone segments tzBucket compiles against

@@ -214,9 +214,12 @@ object IngestJob {
         }
       })
 
-  /** Run independent store flushes concurrently on [[flushPool]]; every
-   *  submitted flush settles before the first failure rethrows (no
-   *  orphaned in-flight jobs), named for diagnosis. Exposed package-side
+  /** Run independent store flushes concurrently on [[flushPool]]. Every
+   *  submitted flush settles before this returns or throws — also when
+   *  the calling thread is interrupted (a streaming query stop) — so no
+   *  flush is left writing a store behind the caller's back. The first
+   *  failure rethrows, named for diagnosis; an interrupt is re-asserted
+   *  on the calling thread once all have settled. Exposed package-side
    *  for the failure-path spec. */
   private[streaming] def runFlushes(flushes: Seq[(String, () => Unit)]): Unit = {
     if (flushes.size == 1) flushes.head._2()
@@ -226,12 +229,16 @@ object IngestJob {
           def call(): Unit = run()
         })
       }
-      // settle ALL before rethrowing the first failure
-      val errs = futs.flatMap { case (name, f) =>
+      var interrupted = false
+      def settle(f: java.util.concurrent.Future[Unit]): Option[Throwable] =
         try { f.get(); None }
-        catch { case e: java.util.concurrent.ExecutionException =>
-          Some(name -> e.getCause) }
-      }
+        catch {
+          case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+          case e: java.util.concurrent.CancellationException => Some(e)
+          case _: InterruptedException => interrupted = true; settle(f)
+        }
+      val errs = futs.flatMap { case (name, f) => settle(f).map(name -> _) }
+      if (interrupted) Thread.currentThread().interrupt()
       errs.headOption.foreach { case (name, e) =>
         throw new RuntimeException(s"store flush '$name' failed", e) }
     }

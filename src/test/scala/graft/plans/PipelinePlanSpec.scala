@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guards for the pipeline operators' scale
- *  claims — the properties PLANS.md documents, pinned as assertions so a
- *  refactor cannot silently reintroduce a scale trap. */
+ *  claims, pinned as assertions so a refactor cannot silently
+ *  reintroduce a scale trap. */
 class PipelinePlanSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"

@@ -657,4 +657,31 @@ class IngestJobSpec extends AnyFunSuite {
     assert(spark.read.parquet(IngestJob.seriesLogPath(cfg)).count() > 0)
     assert(spark.read.parquet(IngestJob.latestLogPath(cfg)).count() > 0)
   }
+  test("an interrupted caller still settles every store flush before returning") {
+    // no flush may keep writing a store after runFlushes has returned or
+    // thrown, and the interrupt stays visible to the caller
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val flushDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val doneBeforeReturn = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val interruptKept = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val caller = new Thread(() => {
+      try IngestJob.runFlushes(Seq(
+        "blocked" -> (() => { started.countDown(); release.await(); flushDone.set(true) }),
+        "quick" -> (() => ())))
+      finally {
+        doneBeforeReturn.set(flushDone.get())
+        interruptKept.set(Thread.currentThread().isInterrupted)
+      }
+    })
+    caller.start()
+    assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    caller.interrupt()
+    caller.join(500) // a caller that abandons the flush returns here
+    release.countDown()
+    caller.join(30000)
+    assert(!caller.isAlive)
+    assert(doneBeforeReturn.get(), "runFlushes finished before its blocked flush did")
+    assert(interruptKept.get(), "the caller's interrupt status must survive")
+  }
 }
